@@ -30,8 +30,7 @@ ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 CLASSPATH = os.path.join(BUILD, "perfbench-classpath.txt")
 FINGERPRINT = os.path.join(BUILD, "perfbench-fingerprint.txt")
-WORKLOADS = ("commit_log", "lake_query", "curation_ingest")
-BUILD_LIMIT_S = 840
+BUILD_LIMIT_S = 720
 HEAP = "3g"
 
 # Spark 4 on JDK 17 outside spark-submit needs these (the same list the
@@ -156,16 +155,6 @@ def git_commit(fp):
 
 
 def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--seconds", type=float, required=True)
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--sf", type=float, default=0.1)
-    ap.add_argument("--perturb", type=int, choices=(0, 1), default=0)
-    a = ap.parse_args()
-    t0 = time.monotonic()
-
     spec_path = os.path.join(ROOT, "BENCHMARK.json")
     for need in (spec_path, os.path.join(ROOT, "build.sbt"),
                  os.path.join(ROOT, "src", "main", "scala", "graft")):
@@ -174,6 +163,17 @@ def main():
                  "root of a graft source tree")
     with open(spec_path) as f:
         spec = json.load(f)
+
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--workload", required=True,
+                    choices=[w["name"] for w in spec["workloads"]])
+    ap.add_argument("--seed", type=int, required=True)
+    ap.add_argument("--seconds", type=float, required=True)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument("--sf", type=float, default=0.1)
+    ap.add_argument("--perturb", type=int, choices=(0, 1), default=0)
+    a = ap.parse_args()
+    t0 = time.monotonic()
 
     fp = fingerprint()
     built = False
@@ -204,13 +204,17 @@ def main():
               "--perturb", str(a.perturb),
               "--root", os.path.join(run_dir, "work"), "--out", result,
               "--commit", git_commit(fp)])
-    limit = (900 if built else 180) - (time.monotonic() - t0) - 10
-    with open(log, "w") as out:
-        p = subprocess.Popen(cmd, cwd=run_dir, stdout=out,
-                             stderr=subprocess.STDOUT, stdin=subprocess.DEVNULL,
-                             start_new_session=True)
-        rc = wait(p, limit)
+    # a limit that grows with the run length, so that it catches hangs
+    # rather than slow runs; 20 s runs end within 180 s in all
+    limit = ((BUILD_LIMIT_S if built else 0) + 110 + 3 * a.seconds
+             - (time.monotonic() - t0))
     try:
+        with open(log, "w") as out:
+            p = subprocess.Popen(cmd, cwd=run_dir, stdout=out,
+                                 stderr=subprocess.STDOUT,
+                                 stdin=subprocess.DEVNULL,
+                                 start_new_session=True)
+            rc = wait(p, limit)
         if rc is None:
             fail(f"{a.workload} did not finish within {limit:.0f} s; log in "
                  f"{log}", 3)

@@ -13,42 +13,47 @@ import org.apache.spark.sql.types._
 
 import graft.sources.GraftLog
 
-/** commit_log: a medallion table under its ETL. One table takes a long
-  * stream of `txnAppend` commits of a few hundred rows, with a merge (a
-  * seeded mix of matched and new keys) and a predicate delete in every
-  * nine commits, then an MV refresh. Right after each refresh an analyst
-  * reads the fresh table: an aggregate the MV serves, SQL point lookups
-  * (half hit, half miss) and a group-by scan. Appends land in id order,
-  * so the table is range-clustered on `id` and a lookup can skip every
-  * file whose stats exclude its key. An in-memory model of the rows
-  * follows every call and is the expected answer to every query. */
+/** commit_log: a medallion table under its ETL. One lineitem-shaped
+  * table takes a long stream of `txnAppend` commits of a few hundred
+  * rows, with a merge (a seeded mix of matched and new keys) and a
+  * predicate delete in every nine commits, then an MV refresh. Right
+  * after each refresh an analyst reads the fresh table: an aggregate the
+  * MV serves, SQL point lookups of an order (half hit, half miss) and a
+  * group-by scan. New orders land in order-key order, so the table is
+  * range-clustered on `l_orderkey` and a lookup can skip every file whose
+  * stats exclude its key. An in-memory model of the rows follows every
+  * call and is the expected answer to every query.
+  *
+  * Rows follow the sf0.1 `lineitem` test table column by column (see
+  * [[CommitLog.Gen]]), plus `l_id`, the row identity that merge and the
+  * MV key on. */
 final class CommitLog(spark: SparkSession, dir: String, a: Args)
     extends Workload {
+  import CommitLog.Line
   private val scale = a.sf / 0.1
   private val baseRows = math.max((5000 * scale).toInt, 100)
-  private val appendRows = math.max((300 * scale).toInt, 10)
+  private val appendRows = math.max((500 * scale).toInt, 10)
   private val mergeRows = math.max((50 * scale).toInt, 6)
-  private val deleteSpan = 25
+  /** Orders per delete: about 25 rows at four lines an order. */
+  private val deleteOrders = 6
   private val rng = new Random(a.seed)
-  private val table = s"$dir/lake/orders_stream"
-  private val view = s"$dir/lake/orders_by_grp"
+  private val gen = new CommitLog.Gen(rng)
+  private val table = s"$dir/lake/lineitem_stream"
+  private val view = s"$dir/lake/lineitem_by_flag"
   private val sqlName = "cl_src"
   private val appId = "perfbench-commit-log"
   private val defSql =
-    s"""SELECT grp, count(1) AS n,
-       |  round(CAST(sum(CAST(value AS DECIMAL(38,10))) AS DOUBLE), 6) AS total
-       |FROM $sqlName GROUP BY grp""".stripMargin
+    s"""SELECT l_returnflag, l_linestatus, count(1) AS n,
+       |  round(CAST(sum(CAST(l_extendedprice AS DECIMAL(38,10))) AS DOUBLE),
+       |    6) AS total
+       |FROM $sqlName GROUP BY l_returnflag, l_linestatus""".stripMargin
   private val commitKinds = Set("append", "merge", "delete", "refresh")
 
-  private type Rec = (String, Double, Int, String)
-  private val schema = StructType(Seq(
-    StructField("id", LongType, nullable = false),
-    StructField("grp", StringType), StructField("value", DoubleType),
-    StructField("qty", IntegerType), StructField("note", StringType)))
-  private val model = mutable.LinkedHashMap.empty[Long, Rec]
-  private val inputs = ArrayBuffer.empty[(Long, Rec)]
+  private val model = mutable.LinkedHashMap.empty[Long, Line]
+  private val inputs = ArrayBuffer.empty[(Long, Line)]
   private val deleted = ArrayBuffer.empty[Long]
   private var nextId = 0L
+  private var nextOrder = 0L
   private var nextBatch = 0L
   private var lastBatch: Option[(DataFrame, Long)] = None
   private var schedule: List[String] = Nil
@@ -63,17 +68,18 @@ final class CommitLog(spark: SparkSession, dir: String, a: Args)
   /** Table bytes and input rows at the end of the first cycle. */
   private var storedAt: Option[(Long, Int)] = None
 
-  private def rec(): Rec = (s"g${rng.nextInt(12)}", rng.nextInt(1000000) / 100.0,
-    1 + rng.nextInt(50), rng.alphanumeric.take(16).mkString)
-  private def df(rows: Seq[(Long, Rec)]): DataFrame =
-    spark.createDataFrame(rows.map { case (id, (g, v, q, n)) =>
-      Row(id, g, v, q, n) }.asJava, schema)
-  private def fresh(n: Int): Seq[(Long, Rec)] =
-    (0 until n).map { _ => nextId += 1; (nextId, rec()) }
+  private def df(rows: Seq[(Long, Line)]): DataFrame =
+    spark.createDataFrame(rows.map { case (id, l) =>
+      Row.fromSeq(id +: l.productIterator.toSeq) }.asJava, CommitLog.schema)
+  /** `n` rows of whole new orders, the last one cut to fit. */
+  private def fresh(n: Int): Seq[(Long, Line)] =
+    Iterator.continually {
+      nextOrder += 1
+      (1 to gen.lines()).map(no => gen.line(nextOrder, no))
+    }.flatten.take(n).map { l => nextId += 1; (nextId, l) }.toSeq
 
   def primary = "append"
   def read = "point"
-  def writeKinds = Set("append")
   def throughput: Double = if (doneMs > 0) doneCommits / (doneMs / 1e3) else 0.0
 
   def cycleDone: Boolean = schedule.isEmpty
@@ -94,17 +100,27 @@ final class CommitLog(spark: SparkSession, dir: String, a: Args)
     spark.sql(s"DROP TABLE IF EXISTS $sqlName")
     spark.sql(s"CREATE TABLE $sqlName USING graft OPTIONS (path '$table')")
     Spans("fixture.mv")(spark.sql(
-      s"CREATE MATERIALIZED VIEW '$view' KEY id AS $defSql").collect())
+      s"CREATE MATERIALIZED VIEW '$view' KEY l_id AS $defSql").collect())
   }
 
   /** One cycle: seven appends, a merge and a delete in a seeded order,
-    * then the refresh and the reads of the fresh table. */
+    * then the refresh and the reads of the fresh table, with four point
+    * lookups that hit and four that miss in a seeded order. */
   def next(): Op = {
     if (schedule.isEmpty) schedule = rng.shuffle(
       List.fill(7)("append") ++ List("merge", "delete")) ++
-      List("refresh", "mv") ++ List.fill(8)("point") ++ List("agg")
+      List("refresh", "mv") ++
+      rng.shuffle(List.fill(4)("hit") ++ List.fill(4)("miss")) ++ List("agg")
     val k = schedule.head; schedule = schedule.tail
     call(k)
+  }
+
+  /** The check of a merge or delete: it committed the version right
+    * after the one it started from. */
+  private def nextVersion(): Long => Boolean = {
+    val want = GraftLog.latestVersion(spark, table).getOrElse(-1L) + 1 +
+      (if (a.perturb) 1 else 0)
+    _ == want
   }
 
   private def call(kind: String): Op = kind match {
@@ -115,34 +131,40 @@ final class CommitLog(spark: SparkSession, dir: String, a: Args)
       Op(kind, () => {
         val ok = GraftLog.txnAppend(d, table, appId, bid)
         rows.foreach(model += _); inputs ++= rows; lastBatch = Some((d, bid))
-        () => ok
+        () => ok != a.perturb
       })
     case "merge" =>
       val share = 0.3 + 0.4 * rng.nextDouble()
       val ids = model.keysIterator.toIndexedSeq
+      // a matched row is a revised order line: same keys, new values
       val matched = rng.shuffle(ids).take((mergeRows * share).toInt)
-        .map(id => (id, rec()))
+        .map { id => val l = model(id); (id, gen.line(l.orderkey, l.linenumber)) }
       val rows = matched ++ fresh(mergeRows - matched.size)
       val d = df(rows)
+      val committed = nextVersion()
       Op(kind, () => {
-        GraftLog.merge(d, table, Seq("id"))
+        val v = GraftLog.merge(d, table, Seq("l_id"))
         rows.foreach(model += _); inputs ++= rows
-        () => true
+        () => committed(v)
       })
     case "delete" =>
-      val ids = model.keysIterator.toIndexedSeq
-      val lo = ids(rng.nextInt(ids.size)); val hi = lo + deleteSpan - 1
+      val orders = model.valuesIterator.map(_.orderkey).toIndexedSeq
+      val lo = orders(rng.nextInt(orders.size))
+      val hi = lo + deleteOrders - 1
+      val committed = nextVersion()
       Op(kind, () => {
-        GraftLog.delete(spark, table, col("id").between(lo, hi))
-        (lo to hi).foreach { i => model -= i; deleted += i }
-        () => true
+        val v = GraftLog.delete(spark, table, col("l_orderkey").between(lo, hi))
+        deleted ++= model.valuesIterator.map(_.orderkey)
+          .filter(o => o >= lo && o <= hi).toSeq.distinct
+        model.filterInPlace { case (_, l) => l.orderkey < lo || l.orderkey > hi }
+        () => committed(v)
       })
     case "refresh" =>
       Op(kind, () => {
         val n = spark.sql(s"REFRESH MATERIALIZED VIEW '$view'")
           .collect()(0).getInt(0)
         folded += n; refreshes += 1
-        () => n >= 1
+        () => (n >= 1) != a.perturb
       })
     case "mv" =>
       Op(kind, () => {
@@ -158,27 +180,28 @@ final class CommitLog(spark: SparkSession, dir: String, a: Args)
             served != a.perturb
         }
       })
-    case "point" =>
-      // a miss is a deleted key where there is one, else past the end
+    case "hit" | "miss" =>
+      // a miss is a deleted order where there is one, else past the end
       val k =
-        if (rng.nextBoolean()) model.keysIterator.drop(rng.nextInt(model.size))
-          .next()
+        if (kind == "hit") model.valuesIterator.drop(rng.nextInt(model.size))
+          .next().orderkey
         else if (deleted.nonEmpty) deleted(rng.nextInt(deleted.size))
-        else nextId + 1 + rng.nextInt(1000)
-      val sql = s"SELECT grp, value, qty, note FROM $sqlName WHERE id = $k"
-      Op(kind, () => {
-        val got = spark.sql(sql).collect().map(render).toSeq
-        () => agree(sql, got, model.get(k).map { case (g, v, q, n) =>
-          render(Row(g, v, q, n)) }.toSeq ++
-          (if (a.perturb) Seq("perturbed") else Nil))()
+        else nextOrder + 1 + rng.nextInt(1000)
+      val sql = s"SELECT ${CommitLog.cols.drop(2).mkString(", ")} " +
+        s"FROM $sqlName WHERE l_orderkey = $k"
+      Op("point", () => {
+        val got = spark.sql(sql).collect().map(render).toSeq.sorted
+        () => agree(sql, got, (model.valuesIterator.filter(_.orderkey == k)
+          .map(l => render(Row.fromSeq(l.productIterator.drop(1).toSeq)))
+          .toSeq ++ (if (a.perturb) Seq("perturbed") else Nil)).sorted)()
       })
     case "agg" =>
       val cut = 1 + rng.nextInt(50)
-      val sql = defSql.replace("GROUP BY", s"WHERE qty <= $cut GROUP BY")
+      val sql = defSql.replace("GROUP BY", s"WHERE l_quantity <= $cut GROUP BY")
       Op(kind, () => {
         val got = groups(spark.sql(sql).collect())
         () => {
-          val want = byGroup(_._3 <= cut)
+          val want = byGroup(_.quantity <= cut)
           agree(sql, got, want)(sameGroups(got, want))
         }
       })
@@ -187,13 +210,16 @@ final class CommitLog(spark: SparkSession, dir: String, a: Args)
   private def render(r: Row): String = r.toSeq.mkString("|")
 
   private def groups(rows: Array[Row]): Map[String, (Long, Double)] =
-    rows.map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+    rows.map(r => s"${r.getString(0)}|${r.getString(1)}" ->
+      (r.getLong(2), r.getDouble(3))).toMap
 
-  /** The model's answer to `defSql` over the rows passing `keep`. */
-  private def byGroup(keep: Rec => Boolean): Map[String, (Long, Double)] =
-    model.values.filter(keep).groupBy(_._1).map { case (g, rs) =>
-      g -> (rs.size.toLong + (if (a.perturb) 1 else 0),
-        Util.sumDecimal(rs.map(_._2)).toDouble) }
+  /** The model's answer to `defSql` over the rows passing `keep`; a
+    * perturbed run expects one group more. */
+  private def byGroup(keep: Line => Boolean): Map[String, (Long, Double)] =
+    model.values.filter(keep).groupBy(l => s"${l.returnflag}|${l.linestatus}")
+      .map { case (g, ls) =>
+        g -> (ls.size.toLong, Util.sumDecimal(ls.map(_.extendedprice)).toDouble)
+      } ++ (if (a.perturb) Map("perturbed" -> (1L, 0.0)) else Map.empty)
 
   private def agree(q: String, got: Any, want: Any)(
       same: Boolean = got == want): Boolean = {
@@ -215,8 +241,8 @@ final class CommitLog(spark: SparkSession, dir: String, a: Args)
     }
 
   private def hashOf(d: DataFrame): (Long, java.math.BigDecimal) = {
-    val r = d.select(count(lit(1)), sum(xxhash64(col("id"), col("grp"),
-        col("value"), col("qty"), col("note")).cast("decimal(38,0)")))
+    val r = d.select(count(lit(1)),
+        sum(xxhash64(CommitLog.cols.map(col): _*).cast("decimal(38,0)")))
       .collect()(0)
     (r.getLong(0), Option(r.getDecimal(1)).getOrElse(java.math.BigDecimal.ZERO))
   }
@@ -277,5 +303,51 @@ final class CommitLog(spark: SparkSession, dir: String, a: Args)
     scala.util.Try(spark.sql(s"DROP MATERIALIZED VIEW '$view'").collect())
     graft.sql.MvRegistry.unregisterMatching(table)
     spark.sql(s"DROP TABLE IF EXISTS $sqlName")
+  }
+}
+
+object CommitLog {
+  /** One row of the sf0.1 `lineitem` test table. */
+  final case class Line(orderkey: Long, partkey: Long, suppkey: Long,
+      linenumber: Int, quantity: Double, extendedprice: Double,
+      discount: Double, tax: Double, returnflag: String, linestatus: String,
+      shipdate: java.sql.Timestamp)
+
+  val schema: StructType = StructType(
+    StructField("l_id", LongType, nullable = false) +: Seq(
+      "l_orderkey" -> LongType, "l_partkey" -> LongType,
+      "l_suppkey" -> LongType, "l_linenumber" -> IntegerType,
+      "l_quantity" -> DoubleType, "l_extendedprice" -> DoubleType,
+      "l_discount" -> DoubleType, "l_tax" -> DoubleType,
+      "l_returnflag" -> StringType, "l_linestatus" -> StringType,
+      "l_shipdate" -> TimestampType).map { case (n, t) => StructField(n, t) })
+  val cols: Seq[String] = schema.fieldNames.toSeq
+
+  /** Draws rows as the sf0.1 `lineitem` test table holds them (600,000
+    * rows): every column independent and uniform over the range it
+    * spans there, and lines per order as counted there. Unlike the test
+    * table, the lines of an order are numbered 1, 2, ... so that
+    * (order, line) names one row. */
+  final class Gen(rng: Random) {
+    /** Orders of the sf0.1 `lineitem` with 1, 2, ..., 17 lines. */
+    private val perOrder = Array(11016, 21814, 29500, 29097, 23631, 15625,
+      8941, 4407, 1959, 818, 292, 93, 29, 10, 1, 2, 1)
+    private val firstShip = java.time.LocalDate.of(1995, 1, 2)
+
+    def lines(): Int = {
+      var r = rng.nextInt(perOrder.sum)
+      var n = 0
+      while (r >= perOrder(n)) { r -= perOrder(n); n += 1 }
+      n + 1
+    }
+
+    def line(order: Long, no: Int): Line = Line(order,
+      rng.nextInt(20000).toLong, rng.nextInt(1000).toLong, no,
+      (1 + rng.nextInt(50)).toDouble,
+      (90068 + rng.nextInt(10499991 - 90068 + 1)) / 100.0,
+      rng.nextInt(11) / 100.0, rng.nextInt(9) / 100.0,
+      Seq("A", "N", "R")(rng.nextInt(3)), Seq("F", "O")(rng.nextInt(2)),
+      java.sql.Timestamp.valueOf(
+        firstShip.plusDays(rng.nextInt(2499).toLong).atStartOfDay))
   }
 }

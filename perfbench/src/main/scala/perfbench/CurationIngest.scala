@@ -20,13 +20,18 @@ import graft.sources.GraftLog
   * own share of exact and perturbed twins of seed documents. After each
   * wave a reviewer reads its verdicts three ways, three times over, and
   * the wave is then re-delivered out of band, which must move neither
-  * table. */
+  * table.
+  *
+  * Documents follow the sf0.1 `documents` test table (5,000 rows) column
+  * by column: the seed corpus is a quarter of it and each wave an eighth
+  * (see [[CurationIngest.Gen]]). */
 final class CurationIngest(spark: SparkSession, dir: String, a: Args)
     extends Workload {
   private val scale = a.sf / 0.1
-  private val seedDocs = math.max((800 * scale).toInt, 40)
-  private val waveDocs = math.max((100 * scale).toInt, 10)
+  private val seedDocs = math.max((1250 * scale).toInt, 40)
+  private val waveDocs = math.max((625 * scale).toInt, 20)
   private val rng = new Random(a.seed)
+  private val gen = new CurationIngest.Gen(rng)
   private val (in, state, verd, ckpt) =
     (s"$dir/lake/landing", s"$dir/lake/bands", s"$dir/lake/verdicts",
       s"$dir/stream_ckpt")
@@ -34,15 +39,10 @@ final class CurationIngest(spark: SparkSession, dir: String, a: Args)
   private val appId = "perfbench-curation"
   private val schema = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
-    StructField("text", StringType)))
-  private val vocab = {
-    val syl = Seq("ka", "lo", "mi", "ra", "te", "su", "no", "vi", "de", "po",
-      "ga", "zu", "fe", "bi", "ho", "ye", "ju", "ce")
-    val r = new Random(a.seed ^ 0x5eedL)
-    (0 until 400).map(_ => (0 until 2 + r.nextInt(2))
-      .map(_ => syl(r.nextInt(syl.size))).mkString).distinct.toIndexedSeq
-  }
-  private val corpus = ArrayBuffer.empty[String]
+    StructField("text", StringType), StructField("lang", StringType),
+    StructField("source", StringType), StructField("n_chars", LongType)))
+  /** Text and language of every seed document. */
+  private val corpus = ArrayBuffer.empty[(String, String)]
   /** Per drained wave: batch id, documents, planted exact twins, frame. */
   private val landed =
     ArrayBuffer.empty[(Long, Seq[Long], Set[Long], DataFrame)]
@@ -54,7 +54,6 @@ final class CurationIngest(spark: SparkSession, dir: String, a: Args)
 
   def primary = "wave"
   def read = "read"
-  def writeKinds = Set("wave")
   def throughput: Double = if (doneMs > 0) doneDocs / (doneMs / 1e3) else 0.0
 
   def cycleDone: Boolean = pending.isEmpty
@@ -71,34 +70,41 @@ final class CurationIngest(spark: SparkSession, dir: String, a: Args)
     * hold, written once as plain parquet. */
   private var storedAt = 0.0
 
-  private def text(): String =
-    Seq.fill(12 + rng.nextInt(60))(vocab(rng.nextInt(vocab.size)))
-      .mkString(" ")
-  private def df(rows: Seq[(Long, String)]): DataFrame =
-    spark.createDataFrame(rows.map { case (i, t) => Row(i, t) }.asJava, schema)
+  /** Document rows: id, text and language. */
+  private type Doc = (Long, String, String)
+  private def df(rows: Seq[Doc]): DataFrame =
+    spark.createDataFrame(rows.map { case (i, t, l) =>
+      Row(i, t, l, s"src${i % 20}", t.length.toLong) }.asJava, schema)
+  private def doc(t: String, lang: String): Doc = { nextId += 1; (nextId, t, lang) }
 
   def setup(): Unit = {
-    val seed = (0 until seedDocs).map { _ =>
-      val t = text(); corpus += t; nextId += 1; (nextId, t)
+    val seed = Seq.fill(seedDocs) {
+      val (t, l) = (gen.text(), gen.lang()); corpus += ((t, l)); doc(t, l)
     }
     df(seed).write.parquet(corpusCopy)
     Spans("neardup.init")(NearDupState.init(spark, df(seed), state))
   }
 
-  /** Novel documents plus exact and perturbed twins of seed documents,
-    * in a share drawn per wave. */
-  private def waveRows(): (Seq[(Long, String)], Set[Long]) = {
-    val novel = Seq.fill(waveDocs) { nextId += 1; (nextId, text()) }
-    val exactShare = 0.05 + 0.25 * rng.nextDouble()
-    val pertShare = 0.05 + 0.25 * rng.nextDouble()
+  /** Shares of exact and perturbed twins in a wave, in a seeded order.
+    * Twins are always 35 % of a wave, so every wave adds as many new
+    * documents to the state and runs with other seeds do the same work. */
+  private val twinShares = Iterator.continually(rng.shuffle(Seq(
+    (0.05, 0.30), (0.30, 0.05), (0.10, 0.25), (0.25, 0.10), (0.15, 0.20),
+    (0.20, 0.15)))).flatten
+
+  /** Exact and perturbed twins of seed documents, in the wave's shares,
+    * and new documents. */
+  private def waveRows(): (Seq[Doc], Set[Long]) = {
+    val (exactShare, pertShare) = twinShares.next()
     val exact = Seq.fill((waveDocs * exactShare).toInt) {
-      nextId += 1; (nextId, corpus(rng.nextInt(corpus.size)))
+      val (t, l) = corpus(rng.nextInt(corpus.size)); doc(t, l)
     }
     val perturbed = Seq.fill((waveDocs * pertShare).toInt) {
-      val ws = corpus(rng.nextInt(corpus.size)).split(" ")
-      ws(rng.nextInt(ws.length)) = vocab(rng.nextInt(vocab.size))
-      nextId += 1; (nextId, ws.mkString(" "))
+      val (t, l) = corpus(rng.nextInt(corpus.size))
+      doc(gen.perturb(t), l)
     }
+    val novel = Seq.fill(waveDocs - exact.size - perturbed.size)(
+      doc(gen.text(), gen.lang()))
     (rng.shuffle(novel ++ exact ++ perturbed), exact.map(_._1).toSet)
   }
 
@@ -128,7 +134,14 @@ final class CurationIngest(spark: SparkSession, dir: String, a: Args)
       drain()
       landed += ((bid, rows.map(_._1), exact, d))
       waves += 1
-      () => true
+      // both tables' ledgers hold the wave as the stream's next batch
+      () => {
+        val want = Some(bid + (if (a.perturb) 1 else 0))
+        val got = Seq(state, verd).map(GraftLog.lastCommittedBatch(spark, _, appId))
+        if (got.exists(_ != want)) System.err.println(
+          s"perfbench: after batch $bid the ledgers stand at ${got.mkString(", ")}")
+        got.forall(_ == want)
+      }
     })
   }
 
@@ -179,8 +192,7 @@ final class CurationIngest(spark: SparkSession, dir: String, a: Args)
         .filter(col("batch_id") === bid && col("is_near_dup"))
         .select("doc_id")) { r =>
       val got = r.map(_.getLong(0)).toSet
-      (exact ++ (if (a.perturb) ids.find(i => !got(i)) else None))
-        .forall(got)
+      (exact ++ (if (a.perturb) Some(-1L) else None)).forall(got)
     }
   }
 
@@ -219,8 +231,7 @@ final class CurationIngest(spark: SparkSession, dir: String, a: Args)
       v.size == ids.size + p && v.map(_._1).toSet == ids.toSet
     }
     val flagged = verdicts.values.flatten.collect { case (i, true) => i }.toSet
-    val planted = landed.flatMap(_._3) ++ (if (a.perturb)
-      landed.flatMap(_._2).find(i => !flagged(i)) else None)
+    val planted = landed.flatMap(_._3) ++ (if (a.perturb) Some(-1L) else None)
     val missed = planted.filterNot(flagged)
     Seq(Check("one_verdict_per_doc", perDoc,
         s"${landed.size} waves, ${verdicts.values.map(_.size).sum} verdicts"),
@@ -248,4 +259,37 @@ final class CurationIngest(spark: SparkSession, dir: String, a: Args)
   }
 
   def teardown(): Unit = spark.streams.active.foreach(_.stop())
+}
+
+object CurationIngest {
+  /** Draws documents as the sf0.1 `documents` test table holds them:
+    * 10 to 100 words (uniform), each drawn uniformly from the table's
+    * 31-word vocabulary, and languages in the table's shares. The
+    * source is `src<doc_id mod 20>` and `n_chars` the text's length, as
+    * there. */
+  final class Gen(rng: Random) {
+    private val vocab = ("a agg batch big column customer data dup fast " +
+      "filter group hash join key line merge order part query row scan " +
+      "slow small sort spark stream table the value vector window")
+      .split(" ")
+    /** Documents per language in the sf0.1 `documents`. */
+    private val langs = Seq("en" -> 2059, "zh" -> 753, "es" -> 744,
+      "fr" -> 742, "de" -> 702)
+
+    private def word(): String = vocab(rng.nextInt(vocab.length))
+
+    def text(): String = Seq.fill(10 + rng.nextInt(91))(word()).mkString(" ")
+
+    def lang(): String = {
+      var r = rng.nextInt(langs.map(_._2).sum)
+      langs.find { case (_, n) => r -= n; r < 0 }.get._1
+    }
+
+    /** `t` with one word replaced. */
+    def perturb(t: String): String = {
+      val ws = t.split(" ")
+      ws(rng.nextInt(ws.length)) = word()
+      ws.mkString(" ")
+    }
+  }
 }

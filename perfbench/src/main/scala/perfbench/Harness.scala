@@ -26,11 +26,10 @@ trait Workload {
   /** True when the last call ended a cycle of the workload's schedule. */
   def cycleDone: Boolean
   def next(): Op
-  /** The op kinds reported as `op_p50_ms` and `read_p50_ms`. */
+  /** The op kinds reported as `op_p50_ms` and `read_p50_ms`; `primary`
+    * is also the graft write call behind `graftlog.commit_*`. */
   def primary: String
   def read: String
-  /** The op kinds that are graft write calls, for `graftlog.commit_*`. */
-  def writeKinds: Set[String]
   /** Told the time of every timed call, in call order. */
   def record(kind: String, ms: Double): Unit = ()
   /** Work done per second of timed calls (commits or documents). */
@@ -55,7 +54,8 @@ final case class OpRec(kind: String, startMs: Long, endMs: Long, ms: Double,
 }
 
 /** What one timed loop saw. `recs`, `other` and `jobs` are filled only
-  * when traced; `other` holds counts made between calls (answer checks). */
+  * when traced; `other` holds counts made between calls (preparing a
+  * call, checking its answer). */
 final class Loop {
   val lat = mutable.LinkedHashMap.empty[String, ArrayBuffer[Double]]
   val order = ArrayBuffer.empty[Double]
@@ -146,8 +146,16 @@ final class Harness(a: Args) {
     l.startMs = System.currentTimeMillis()
     val t0 = System.nanoTime()
     var done = 0
+    // counts made outside the calls: preparing a call, checking its answer
+    def untimed(): Unit = if (traced) {
+      drain(spark); val (c, j) = Counters.take()
+      l.other = (l.other.keySet ++ c.keySet).map(k =>
+        k -> (l.other.getOrElse(k, 0L) + c.getOrElse(k, 0L))).toMap
+      l.jobs ++= j
+    }
     while ((System.nanoTime() - t0) / 1e9 < seconds || done < cycles) {
       val op = w.next()
+      untimed()
       val ms0 = System.currentTimeMillis(); val s0 = System.nanoTime()
       val verify = try Spans(s"op.${op.kind}")(op.run()) catch {
         case e: Throwable =>
@@ -179,12 +187,7 @@ final class Harness(a: Args) {
           false
       })
       if (!ok) l.failed += 1
-      if (traced) {
-        drain(spark); val (c, j) = Counters.take()
-        l.other = (l.other.keySet ++ c.keySet).map(k =>
-          k -> (l.other.getOrElse(k, 0L) + c.getOrElse(k, 0L))).toMap
-        l.jobs ++= j
-      }
+      untimed()
     }
     l.wallMs = (System.nanoTime() - t0) / 1e6
     l.endMs = System.currentTimeMillis()
@@ -264,7 +267,7 @@ final class Harness(a: Args) {
     val ctx = Seq(
       "workload" -> Json.str(a.workload), "seed" -> a.seed.toString,
       "seconds" -> Json.num(a.seconds), "trace" -> (if (a.trace) "1" else "0"),
-      "sf" -> Json.num(a.sf), "nproc" -> a.cores.toString,
+      "sf" -> Json.num(a.sf), "nproc" -> Runtime.getRuntime.availableProcessors.toString,
       "spark_master" -> Json.str(master),
       "loadavg_start" -> Json.num(load0), "loadavg_end" -> Json.num(loadAvg),
       "driver_heap_max_mb" -> Json.num(

@@ -22,7 +22,7 @@ object Layers {
     def of(kinds: Set[String]) = recs.filter(r => kinds(r.kind))
     def driverMs(r: OpRec) =
       r.ms - Stats.covered(r.jobs, r.startMs, r.endMs).toDouble
-    val writes = of(w.writeKinds)
+    val writes = of(Set(w.primary))
     val queries = of(queryKinds)
     val reads = of(Set(w.read))
     val merges = of(Set("merge"))
@@ -46,8 +46,8 @@ object Layers {
     // checkpoint, which shows as a checkpoint file created by a call
     var since = 0
     val pts = scala.collection.mutable.ArrayBuffer.empty[(Double, Double)]
-    of(w.writeKinds ++ Set("merge", "delete")).foreach { r =>
-      if (w.writeKinds(r.kind)) pts += ((since.toDouble, r.n("fs.open.log")))
+    of(Set(w.primary, "merge", "delete")).foreach { r =>
+      if (r.kind == w.primary) pts += ((since.toDouble, r.n("fs.open.log")))
       since = if (r.n("checkpoint_writes") > 0) 0 else since + 1
     }
     m("graftlog.log_opens_slope") = Stats.slope(pts.toSeq)
